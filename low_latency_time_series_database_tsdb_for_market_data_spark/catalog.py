@@ -31,6 +31,9 @@ comparison (a column-side cast would silently kill pushdown).
 from __future__ import annotations
 
 import datetime as _dt
+import time
+from collections import Counter, defaultdict
+from typing import Callable, TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +55,8 @@ TABLES = (
 )
 
 _EPOCH = _dt.datetime(1970, 1, 1)
+
+V = TypeVar("V")
 
 
 def _allow_nanos(spark: SparkSession) -> None:
@@ -215,70 +220,83 @@ def parquet_num_rows(path: str) -> int | None:
 def parquet_fingerprint(path: str) -> tuple:
     """Cheap identity of a parquet file/dir: sorted (name, size,
     mtime_ns) of its parquet files — os.stat only, no footer reads, no
-    Spark job.  Session caches keyed on a data DIRECTORY (the verdict
-    model, the corpus signature table) add this to their key so a
-    fixture dir regenerated in-place within a long-lived session
-    (soak/test tooling does) invalidates instead of serving stale
-    training (round-14 advice).  Unstat-able paths fingerprint as an
-    empty tuple — the cache then keys on path alone, the old behavior."""
+    Spark job.  Raises OSError when the path cannot be listed or
+    stat-ed, so an unreadable directory never passes for an empty one
+    (an empty directory fingerprints as ``()``)."""
     from pathlib import Path
 
+    p = Path(path)
+    files = sorted(p.glob("**/*.parquet")) if p.is_dir() else [p]
+    return tuple(
+        (f.name, st.st_size, st.st_mtime_ns) for f in files for st in (f.stat(),)
+    )
+
+
+# The one session cache: (kind, path) -> (applicationId, fingerprint,
+# value).  Staleness rule: an entry is served only while BOTH the
+# session (applicationId) and parquet_fingerprint(path) still match.  A
+# write, compaction or retention swap under `path` changes the
+# fingerprint, so the next lookup rebuilds — writers never invalidate
+# anything — and a stopped session's entry is replaced on its path's
+# next use.  An unreadable path (OSError) is rebuilt on every call and
+# never stored.
+_SESSION_CACHE: dict[tuple[str, str], tuple[str, tuple, object]] = {}
+
+# kind -> {"hits", "misses", "build_s"}.  build_s counts each build
+# once: seconds spent in a nested session_cached build are charged to
+# the nested kind only.
+CACHE_STATS: defaultdict[str, Counter] = defaultdict(Counter)
+
+
+def _release(value: object) -> None:
+    """Free the blocks a replaced value pins: the checkpointed RDD behind
+    each localCheckpoint DataFrame in it (a DataFrame or a tuple of
+    them), which Dataset.unpersist does not reach."""
+    for df in value if isinstance(value, tuple) else (value,):
+        if isinstance(df, DataFrame):
+            plan = df._jdf.queryExecution().logical()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+
+
+def session_cached(
+    spark: SparkSession, kind: str, path: str, build: Callable[[], V]
+) -> V:
+    """``build()``'s value for the parquet data at ``path``, reused within
+    one Spark session until the data changes (the staleness rule is on
+    _SESSION_CACHE above).  A miss releases the entry it replaces."""
+    stats = CACHE_STATS[kind]
+    app = spark.sparkContext.applicationId
+    key = (kind, path)
     try:
-        p = Path(path)
-        files = sorted(p.glob("**/*.parquet")) if p.is_dir() else [p]
-        return tuple(
-            (f.name, st.st_size, st.st_mtime_ns)
-            for f in files
-            for st in (f.stat(),)
-        )
-    except Exception:
-        return ()
-
-
-# Relation cache (round 12, r11 verdict item #6 — the cold first-query
-# floor): every fresh spark.read.parquet pays ~0.1-0.2 s of datasource
-# resolution (py4j round-trips, file listing, footer schema) even in a
-# warm session; a long-lived query service opening the same immutable
-# table per request re-pays it on EVERY query.  Caching the resolved
-# relation per (session, path) drops repeat opens to a dict hit.
-# Invariant: the underlying files are immutable while cached (true for
-# the testdata tables and the serving layer's published snapshots);
-# writers that replace a table call invalidate_relation() — the
-# parquet writer's own read path (sources.writer.read_ticks) does not
-# use this cache, so ingest tests see fresh listings as before.
-_RELATION_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _evict_dead_sessions() -> None:
-    """Drop cached relations whose owning SparkContext has stopped
-    (ADVICE r12: a long-lived process cycling SparkSessions otherwise
-    accumulates dead DataFrame references forever).  A stopped context
-    nulls its JVM handle, so the probe is a local attribute check —
-    no py4j round-trip; any introspection surprise counts as dead."""
-    for k, df in list(_RELATION_CACHE.items()):
-        try:
-            alive = df.sparkSession.sparkContext._jsc is not None
-        except Exception:
-            alive = False
-        if not alive:
-            del _RELATION_CACHE[k]
+        fp = parquet_fingerprint(path)
+    except OSError:
+        fp = None
+    old = _SESSION_CACHE.get(key)
+    if old is not None and old[:2] == (app, fp):
+        stats["hits"] += 1
+        return old[2]
+    stats["misses"] += 1
+    if old is not None:
+        del _SESSION_CACHE[key]
+        if old[0] == app:  # a stopped session's blocks died with it
+            _release(old[2])
+    nested0 = sum(s["build_s"] for s in CACHE_STATS.values())
+    t0 = time.perf_counter()
+    value = build()
+    nested = sum(s["build_s"] for s in CACHE_STATS.values()) - nested0
+    stats["build_s"] += time.perf_counter() - t0 - nested
+    if fp is not None:
+        _SESSION_CACHE[key] = (app, fp, value)
+    return value
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _RELATION_CACHE.get(key)
-    if df is None:
-        _evict_dead_sessions()  # only on miss: hits stay dict-speed
-        df = spark.read.parquet(path)
-        _RELATION_CACHE[key] = df
-    return df
-
-
-def invalidate_relation(path: str) -> None:
-    """Drop every session's cached relation for ``path`` (call after
-    replacing a table's files in place)."""
-    for k in [k for k in _RELATION_CACHE if k[1] == path]:
-        del _RELATION_CACHE[k]
+    """The resolved relation for ``path``: a fresh spark.read.parquet
+    pays ~0.1-0.2 s of datasource resolution (py4j round-trips, file
+    listing, footer schema) even in a warm session, which a service
+    opening the same table per request would re-pay on every query."""
+    return session_cached(spark, "relation", path, lambda: spark.read.parquet(path))
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -158,13 +158,7 @@ class PointServer:
         materializes the new slice; returns the seconds it took.  Probes
         issued concurrently keep working — worst case they read the old
         cached plan until the swap completes."""
-        from .catalog import invalidate_relation
-
         self._hot.unpersist(blocking=False)
-        # the catalog's per-session relation cache pins the file
-        # listing too (round 12) — an external writer's commit is
-        # invisible until the entry is dropped
-        invalidate_relation(f"{self._sf_dir}/events.parquet")
         self.__init__(
             self._spark,
             self._sf_dir,

@@ -10,6 +10,7 @@ session timezone so results compare bit-for-bit against the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +19,23 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+_MIB_PER_UNIT = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def initial_heap_option(driver_mem: str) -> str:
+    """The driver's ``-Xms`` flag: 8g, or the driver memory when that is
+    smaller — an initial heap above the maximum stops the JVM at start.
+    The pin exists because the first allocation-heavy stage otherwise
+    pays the full grow-from-default curve (measured 2-4x on the first
+    large hash-agg); clusters set Xms=Xmx for the same reason.
+    ``driver_mem`` is a Spark memory string ("4g", "512m"; a bare
+    number is MiB)."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_mem.strip().lower())
+    if m and int(m[1]) * _MIB_PER_UNIT[m[2] or "m"] < 8 * 1024:
+        return f"-Xms{m[1]}{m[2] or 'm'}"
+    return "-Xms8g"
 
 
 _WARMED: set[tuple[str, str | None]] = set()
@@ -86,6 +104,7 @@ def get_spark(app_name: str = "tsdb-spark", warm: bool = False) -> SparkSession:
     runs :func:`warm_start` so the first real query pays serving cost,
     not lazy-init cost."""
     cpus = cpu_count()
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -95,7 +114,7 @@ def get_spark(app_name: str = "tsdb-spark", warm: bool = False) -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # write timestamps as TIMESTAMP_MICROS, not the legacy INT96
@@ -108,11 +127,7 @@ def get_spark(app_name: str = "tsdb-spark", warm: bool = False) -> SparkSession:
         # GC; long sessions otherwise accumulate them until allocation-heavy
         # stages thrash (measured: a 5s groupBy degrading to 25s)
         .config("spark.cleaner.periodicGC.interval", "1min")
-        # pin a real initial heap: the first allocation-heavy stage
-        # otherwise pays the full grow-from-default curve (measured 2-4x
-        # on the first large hash-agg); clusters set Xms=Xmx for the same
-        # reason
-        .config("spark.driver.extraJavaOptions", "-Xms8g")
+        .config("spark.driver.extraJavaOptions", initial_heap_option(driver_mem))
         # round 13: skip PySpark's per-API-call Python call-site capture
         # (SPARK-47274 error context) — it walks the Python stack AND
         # makes an extra JVM round-trip on EVERY DataFrame/Column call;

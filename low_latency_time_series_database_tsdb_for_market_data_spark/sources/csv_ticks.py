@@ -31,10 +31,16 @@ def read_tick_csv(spark: SparkSession, path: str) -> DataFrame:
     """
     lines = spark.read.text(path)
     toks = lines.select(F.split(F.col("value"), ",").alias("t"))
+
+    def tok(i: int):
+        # F.get is NULL past the end (t[i] raises under ANSI mode), so
+        # a short line drops like the reference's "fewer than 3 tokens"
+        return F.trim(F.get(F.col("t"), i))
+
     parsed = toks.select(
-        F.trim(F.col("t")[0]).try_cast("bigint").alias("ts"),
-        F.trim(F.col("t")[1]).try_cast("double").alias("price"),
-        F.trim(F.col("t")[2]).try_cast("bigint").alias("volume"),
+        tok(0).try_cast("bigint").alias("ts"),
+        tok(1).try_cast("double").alias("price"),
+        tok(2).try_cast("bigint").alias("volume"),
     )
     return parsed.where(
         F.col("ts").isNotNull()

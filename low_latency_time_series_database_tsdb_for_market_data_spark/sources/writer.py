@@ -19,8 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import invalidate_relation
-
 
 def write_ticks(
     ticks: DataFrame,
@@ -71,9 +69,6 @@ def write_ticks(
     if not presorted:
         ticks = ticks.sortWithinPartitions(symbol_col, ts_col)
     ticks.write.mode(mode).partitionBy(symbol_col).parquet(path)
-    # the writer owns the invalidation (ADVICE r12): any session that
-    # cached this path's relation must re-list after the files change
-    invalidate_relation(path)
 
 
 def read_ticks(spark: SparkSession, path: str) -> DataFrame:
@@ -118,7 +113,6 @@ def compact_ticks(
         raise RuntimeError(f"compact stage incomplete: {staged} != {rows}")
     _shutil.rmtree(path)
     _shutil.move(stage, path)
-    invalidate_relation(path)  # in-place swap: cached listings are stale
     files_after = len(list(_Path(path).glob("**/*.parquet")))
     return {
         "rows": rows,

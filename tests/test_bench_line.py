@@ -237,3 +237,15 @@ def test_registry_query_numbers_unique():
     nums = [bench._qnum(n) for n in reg]
     assert len(nums) == len(set(nums)), "duplicate query numbers"
     assert all(n < 10**9 for n in nums), "unparseable registry name"
+
+
+def test_duplicate_query_numbers_raise():
+    """Two names sharing a query number would collapse into one key
+    (and misalign the positional decode), so build_driver_line refuses
+    them."""
+    import pytest
+
+    qs = _fake_queries(30)
+    qs["q07_another_operator"] = 0.5
+    with pytest.raises(ValueError, match="q07_another_operator"):
+        build_driver_line(round(sum(qs.values()), 4), qs, _SCALARS)

@@ -161,39 +161,35 @@ def test_streaming_ingest_both_layouts(spark, layouts, tmp_path):
 
 
 def test_relation_cache_reuses_and_invalidates(spark, tmp_path):
-    """Round-12 cold-floor work: table()/events_raw() resolve a path
-    once per session (the ~0.1-0.2 s datasource re-resolution was the
-    cold first-query's biggest component); invalidate_relation() drops
-    the entry so a replaced table is re-listed."""
-    import pyspark.sql.functions as F
+    """table()/events_raw() resolve a path once per session (the
+    ~0.1-0.2 s datasource re-resolution was the cold first-query's
+    biggest component); rewriting the table in place changes its
+    fingerprint, so the next table() re-lists the files with no
+    invalidation call from the writer."""
+    import shutil
 
     from low_latency_time_series_database_tsdb_for_market_data_spark import (
         catalog as cat,
     )
 
     d = str(tmp_path)
-    spark.range(3).withColumnRenamed("id", "doc_id").write.parquet(
-        f"{d}/documents.parquet"
-    )
+    path = f"{d}/documents.parquet"
+    spark.range(3).withColumnRenamed("id", "doc_id").write.parquet(path)
     a = cat.table(spark, d, "documents")
     b = cat.table(spark, d, "documents")
     # the same resolved relation object comes back (no re-listing)
-    key = (spark.sparkContext.applicationId, f"{d}/documents.parquet")
-    assert key in cat._RELATION_CACHE
+    assert ("relation", path) in cat._SESSION_CACHE
     assert a is b
     assert a.count() == 3
 
-    # replace the files in place -> stale listing would break the read;
-    # invalidation re-resolves
-    import shutil
-
-    shutil.rmtree(f"{d}/documents.parquet")
-    spark.range(5).withColumnRenamed("id", "doc_id").write.parquet(
-        f"{d}/documents.parquet"
-    )
-    cat.invalidate_relation(f"{d}/documents.parquet")
-    assert key not in cat._RELATION_CACHE
-    assert cat.table(spark, d, "documents").count() == 5
+    # replace the files in place: the stale listing would name deleted
+    # files; the fingerprint check re-resolves
+    shutil.rmtree(path)
+    spark.range(5).withColumnRenamed("id", "doc_id").write.parquet(path)
+    c = cat.table(spark, d, "documents")
+    assert c is not a
+    assert c.count() == 5
+    assert cat.table(spark, d, "documents") is c
 
 
 def test_warm_start_sf_dir_preopens_events(spark, sf_dir):
@@ -207,6 +203,100 @@ def test_warm_start_sf_dir_preopens_events(spark, sf_dir):
     )
 
     warm_start(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, f"{sf_dir}/events.parquet")
-    assert key in cat._RELATION_CACHE
+    assert ("relation", f"{sf_dir}/events.parquet") in cat._SESSION_CACHE
     warm_start(spark, sf_dir)  # second call: no-op, no error
+
+
+def _fake_spark(app: str = "app-1"):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+
+def test_session_cache_staleness_rule(tmp_path):
+    """An entry is a hit only while the applicationId and the path's
+    fingerprint both match; hits and misses are counted per kind."""
+    import os
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark import (
+        catalog as cat,
+    )
+
+    f = tmp_path / "t.parquet"
+    f.write_bytes(b"v1")
+    built = []
+
+    def build():
+        built.append(object())
+        return built[-1]
+
+    kind = "test-staleness"
+    v1 = cat.session_cached(_fake_spark(), kind, str(f), build)
+    assert cat.session_cached(_fake_spark(), kind, str(f), build) is v1
+    # another session (the old one stopped): rebuilt
+    v2 = cat.session_cached(_fake_spark("app-2"), kind, str(f), build)
+    assert v2 is not v1
+    # same size, new mtime: rebuilt
+    st = f.stat()
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    v3 = cat.session_cached(_fake_spark("app-2"), kind, str(f), build)
+    assert v3 is not v2
+    assert cat.session_cached(_fake_spark("app-2"), kind, str(f), build) is v3
+    assert (cat.CACHE_STATS[kind]["hits"], cat.CACHE_STATS[kind]["misses"]) == (2, 3)
+    assert len(built) == 3
+
+
+def test_session_cache_unreadable_path_never_serves_stored(tmp_path, monkeypatch):
+    """When the fingerprint raises OSError, the helper builds and
+    returns a fresh value and stores nothing, so an unreadable directory
+    never matches an entry stored while it was readable (or empty)."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark import (
+        catalog as cat,
+    )
+
+    d = tmp_path / "empty_dir"
+    d.mkdir()
+    assert cat.parquet_fingerprint(str(d)) == ()
+    kind = "test-unreadable"
+    stored = cat.session_cached(_fake_spark(), kind, str(d), object)
+    assert cat.session_cached(_fake_spark(), kind, str(d), object) is stored
+
+    def unreadable(path):
+        raise PermissionError(13, "Permission denied", path)
+
+    monkeypatch.setattr(cat, "parquet_fingerprint", unreadable)
+    a = cat.session_cached(_fake_spark(), kind, str(d), object)
+    b = cat.session_cached(_fake_spark(), kind, str(d), object)
+    assert a is not stored and b is not stored and a is not b
+    assert (kind, str(d)) not in cat._SESSION_CACHE
+
+
+def test_session_cache_counts_nested_build_once(tmp_path):
+    """A build that calls another session_cached build is charged its
+    own seconds only: the per-kind build seconds sum to the wall time,
+    not to wall time plus the nested build."""
+    import time
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark import (
+        catalog as cat,
+    )
+
+    f = tmp_path / "n.parquet"
+    f.write_bytes(b"x")
+
+    def inner():
+        time.sleep(0.3)
+        return "inner"
+
+    def outer():
+        time.sleep(0.2)
+        return cat.session_cached(_fake_spark(), "test-inner", str(f), inner)
+
+    t0 = time.perf_counter()
+    assert cat.session_cached(_fake_spark(), "test-outer", str(f), outer) == "inner"
+    wall = time.perf_counter() - t0
+    got_inner = cat.CACHE_STATS["test-inner"]["build_s"]
+    got_outer = cat.CACHE_STATS["test-outer"]["build_s"]
+    assert got_inner >= 0.3
+    assert 0.2 <= got_outer < 0.45  # the nested 0.3 s is not in it
+    assert got_inner + got_outer <= wall

@@ -92,6 +92,21 @@ def test_import_malformed_true_count(spark, data_dir):
     ]
 
 
+def test_import_skips_line_without_volume(spark, data_dir, tmp_path):
+    """A line with a numeric timestamp and price but no volume token is
+    skipped like the reference's "fewer than 3 tokens" rule; indexing
+    the missing token must not fail the whole import under ANSI mode."""
+    csv = tmp_path / "short.csv"
+    csv.write_text("2000,50.5,10\n2004,53.0\n2005,54.0,30\n")
+    out = cli.run(["import", "CSV", str(csv)], spark, data_dir)
+    assert out[0].startswith("Imported 2 ticks for CSV")
+    assert cli.run(["query", "CSV", "2000", "2005"], spark, data_dir) == [
+        "Found 2 results:",
+        "Timestamp: 2000 Price: 50.50 Volume: 10",
+        "Timestamp: 2005 Price: 54.00 Volume: 30",
+    ]
+
+
 def test_import_seq_assignment_is_narrow(spark, data_dir, monkeypatch):
     """cmd_import's seq assignment must be a pure narrow expression over
     the CSV scan — no Window, no Exchange (the old implementation
