@@ -130,6 +130,39 @@ def _footer_metadatas(path: str):
         return None
 
 
+def _ts_stat_epoch_ns(path: str, col: str, pick: Callable) -> int | None:
+    """`pick` (min or max) over every row group's `col` statistic, as UTC
+    epoch nanos; None whenever the footers cannot be trusted (see
+    :func:`ts_min_epoch_ns`)."""
+    mds = _footer_metadatas(path)
+    if mds is None:
+        return None
+    try:
+        vals: list[_dt.datetime] = []
+        for md in mds:
+            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+            if col not in idx:
+                return None
+            lt = str(md.schema.column(idx[col]).logical_type)
+            if not lt.startswith("Timestamp(") or "timeUnit=microseconds" not in lt:
+                return None  # nanos/other layouts: let Spark probe the data
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[col]).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                v = st.min if pick is min else st.max
+                if not isinstance(v, _dt.datetime):
+                    return None
+                if v.tzinfo is not None:  # adjusted-to-UTC stats are tz-aware
+                    v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+                vals.append(v)
+        if not vals:
+            return None
+        return ((pick(vals) - _EPOCH) // _dt.timedelta(microseconds=1)) * 1000
+    except Exception:  # malformed stats -> data-probe fallback
+        return None
+
+
 def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
     """Minimum ts as UTC epoch nanos read from parquet FOOTER statistics —
     no data scan, no Spark job.  Row-group min/max stats are this engine's
@@ -143,33 +176,7 @@ def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
     not worth trusting for an exactness-gated literal — or when the path
     is not locally listable (object stores): the probe is an
     optimization, so every failure degrades to the data probe."""
-    mds = _footer_metadatas(path)
-    if mds is None:
-        return None
-    try:
-        lo: _dt.datetime | None = None
-        for md in mds:
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col not in idx:
-                return None
-            lt = str(md.schema.column(idx[col]).logical_type)
-            if not lt.startswith("Timestamp(") or "timeUnit=microseconds" not in lt:
-                return None  # nanos/other layouts: let Spark probe the data
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mn = st.min
-                if not isinstance(mn, _dt.datetime):
-                    return None
-                if mn.tzinfo is not None:  # adjusted-to-UTC stats are tz-aware
-                    mn = mn.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                lo = mn if lo is None or mn < lo else lo
-        if lo is None:
-            return None
-        return ((lo - _EPOCH) // _dt.timedelta(microseconds=1)) * 1000
-    except Exception:  # malformed stats -> data-probe fallback
-        return None
+    return _ts_stat_epoch_ns(path, col, min)
 
 
 def ts_max_epoch_ns(path: str, col: str = "ts") -> int | None:
@@ -177,33 +184,7 @@ def ts_max_epoch_ns(path: str, col: str = "ts") -> int | None:
     upper-bound twin of :func:`ts_min_epoch_ns`, same contract: None on
     any layout/stat the probe cannot trust, caller falls back to a data
     probe."""
-    mds = _footer_metadatas(path)
-    if mds is None:
-        return None
-    try:
-        hi: _dt.datetime | None = None
-        for md in mds:
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col not in idx:
-                return None
-            lt = str(md.schema.column(idx[col]).logical_type)
-            if not lt.startswith("Timestamp(") or "timeUnit=microseconds" not in lt:
-                return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mx = st.max
-                if not isinstance(mx, _dt.datetime):
-                    return None
-                if mx.tzinfo is not None:
-                    mx = mx.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                hi = mx if hi is None or mx > hi else hi
-        if hi is None:
-            return None
-        return ((hi - _EPOCH) // _dt.timedelta(microseconds=1)) * 1000
-    except Exception:  # malformed stats -> data-probe fallback
-        return None
+    return _ts_stat_epoch_ns(path, col, max)
 
 
 def parquet_num_rows(path: str) -> int | None:

@@ -22,7 +22,12 @@ Storage: one partitioned parquet tick table per data_dir (symbol is a
 partition column — the reference's directory-per-symbol model,
 `column_storage.cpp:13-18`), time-sorted row groups via the engine's
 writer.  Timestamps are epoch seconds held as int64, exactly the
-reference's opaque-u64 model (`timeseries_db.hpp:19-24`).
+reference's opaque-u64 model (`timeseries_db.hpp:19-24`).  Reads
+(``query``, ``last``, the benchmark's count and the append seq base)
+descend the parquet footers and read the row groups they select on the
+driver (`sources/tick_probe.py`, the B+ tree descent of
+`bplus_tree.hpp:95-106`) and run no Spark job; writes and ``maintain``
+stay on Spark.
 """
 
 from __future__ import annotations
@@ -30,9 +35,11 @@ from __future__ import annotations
 import sys
 import time
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .sources import tick_probe
 
 TICK_SCHEMA = T.StructType(
     [
@@ -58,23 +65,6 @@ def _table_path(data_dir: str) -> str:
     return f"{data_dir}/ticks"
 
 
-def _load(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame | None:
-    """Symbol slice of the tick table (partition-pruned scan), or None if
-    the table does not exist yet."""
-    try:
-        df = spark.read.schema(TICK_SCHEMA).parquet(_table_path(data_dir))
-    except Exception:
-        return None
-    return df.where(F.col("symbol") == symbol)
-
-
-def _next_seq(df: DataFrame | None) -> int:
-    if df is None:
-        return 0
-    row = df.agg(F.max("seq").alias("m")).collect()[0]
-    return 0 if row["m"] is None else int(row["m"]) + 1
-
-
 def _append(
     spark: SparkSession, data_dir: str, symbol: str, rows: list[tuple[int, float, int]]
 ) -> int:
@@ -86,7 +76,7 @@ def _append(
     from the source."""
     from .sources.writer import write_ticks
 
-    base = _next_seq(_load(spark, data_dir, symbol))
+    base = tick_probe.next_seq(_table_path(data_dir), symbol)
     data = [
         Row(ts=int(ts), price=float(p), volume=int(v), seq=base + i, symbol=symbol)
         for i, (ts, p, v) in enumerate(rows)
@@ -115,23 +105,13 @@ def cmd_query(
     spark: SparkSession, data_dir: str, symbol: str, start: int, end: int
 ) -> list[str]:
     """Inclusive time-range scan, ts-ordered, seq-ordered ties (S4)."""
-    df = _load(spark, data_dir, symbol)
-    rows = (
-        []
-        if df is None
-        else df.where((F.col("ts") >= start) & (F.col("ts") <= end))
-        .orderBy("ts", "seq")
-        .collect()
-    )
+    rows = tick_probe.query(_table_path(data_dir), symbol, start, end)
     return [f"Found {len(rows)} results:"] + _fmt(rows)
 
 
 def cmd_last(spark: SparkSession, data_dir: str, symbol: str, n: int) -> list[str]:
     """Last-N in arrival order, emitted oldest-first (S6)."""
-    df = _load(spark, data_dir, symbol)
-    rows = []
-    if df is not None:
-        rows = df.orderBy(F.desc("seq")).limit(n).orderBy("seq").collect()
+    rows = tick_probe.last(_table_path(data_dir), symbol, n)
     return [f"Last {len(rows)} ticks for {symbol}:"] + _fmt(rows)
 
 
@@ -158,7 +138,7 @@ def cmd_import(
     from .sources.csv_ticks import read_tick_csv
     from .sources.writer import write_ticks
 
-    base = _next_seq(_load(spark, data_dir, symbol))
+    base = tick_probe.next_seq(_table_path(data_dir), symbol)
     parsed = read_tick_csv(spark, csv_path)
     counts = dict(
         (r["pid"], r["n"])
@@ -206,7 +186,7 @@ def cmd_benchmark(
     # seq must continue from the symbol's current max (same contract as
     # _append), else a benchmark on a pre-populated symbol duplicates seq
     # values and corrupts `last` ordering / (ts, seq) tie-breaking
-    base = _next_seq(_load(spark, data_dir, symbol))
+    base = tick_probe.next_seq(_table_path(data_dir), symbol)
     gen = spark.range(count).select(
         (F.lit(now) + F.col("id")).alias("ts"),
         (100.0 + F.rand(7) * 100.0).alias("price"),
@@ -227,11 +207,7 @@ def cmd_benchmark(
     ]
 
     t0 = time.perf_counter()
-    n = (
-        _load(spark, data_dir, symbol)
-        .where((F.col("ts") >= now) & (F.col("ts") <= now + count - 1))
-        .count()
-    )
+    n = tick_probe.count(_table_path(data_dir), symbol, now, now + count - 1)
     query_ms = max(1, int((time.perf_counter() - t0) * 1000))
     out.append(
         f"Queried {n} ticks in {query_ms}ms ({n * 1000.0 / query_ms} ticks/second)"

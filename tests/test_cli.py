@@ -132,8 +132,8 @@ def test_import_seq_assignment_is_narrow(spark, data_dir, monkeypatch):
     assert "Window" not in plan, plan
     # second import: seq continues from the stored max, still narrow
     cli.run(["import", "CSV", str(FIXTURES / "ticks_malformed.csv")], spark, data_dir)
-    df = cli._load(spark, data_dir, "CSV")
-    seqs = sorted(r.seq for r in df.select("seq").collect())
+    df = spark.read.schema(cli.TICK_SCHEMA).parquet(f"{data_dir}/ticks")
+    seqs = sorted(r.seq for r in df.where("symbol = 'CSV'").select("seq").collect())
     assert seqs == list(range(6))
 
 
@@ -157,8 +157,8 @@ def test_benchmark_seq_continues_from_existing(spark, data_dir):
     for ts in (10, 20, 30):
         cli.run(["insert", "B", str(ts), "1.0", "1"], spark, data_dir)
     cli.run(["benchmark", "B", "5"], spark, data_dir)
-    df = cli._load(spark, data_dir, "B")
-    seqs = sorted(r.seq for r in df.select("seq").collect())
+    df = spark.read.schema(cli.TICK_SCHEMA).parquet(f"{data_dir}/ticks")
+    seqs = sorted(r.seq for r in df.where("symbol = 'B'").select("seq").collect())
     assert len(seqs) == 8
     assert len(set(seqs)) == 8, "duplicate seq values after benchmark"
     assert seqs == list(range(seqs[0], seqs[0] + 8))
